@@ -1391,8 +1391,7 @@ def _subdivision_ladder_spark(spark: SparkSession) -> DataFrame:
     # fixture has no rung singletons, but divergent semantics would
     # desync silently on any fixture change — ADVICE r2)
     assign = subdivide_ladder(clusters, edges, max_size=6,
-                              thresholds=[0.7], cfg=DEFAULT_CONFIG,
-                              singletons_to_noise=False)
+                              thresholds=[0.7], singletons_to_noise=False)
     parts = F.split(F.col("cluster_key"), "\\.")
     return (assign.select(
         F.col("clip_id").cast("bigint").alias("doc_id"),

@@ -27,7 +27,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DedupConfig
@@ -74,10 +73,9 @@ def shingle_hash_set(norm: str, k: int) -> list[int]:
     """Canonical `signed.shingle_hashes` for one NORMALIZED transcript.
 
     Single source of truth for the stored representation: the fused
-    signature scan (`_sign_batch`), the pre-r4 workdir migration
-    (`migrate_signed`), and the pair-for-pair Jaccard equality tests
-    all share this chain, so the tests pin the production kernel
-    rather than a private re-implementation drifting beside it."""
+    signature scan (`_sign_batch`) and the pair-for-pair Jaccard
+    equality tests share this chain, so the tests pin the production
+    kernel rather than a private re-implementation drifting beside it."""
     sh = X.shingles(X.tokenize(norm or ""), k)
     return _i64_shingle_set(H.hash_strs_u64(sh) if sh else None)
 
@@ -176,27 +174,15 @@ def add_signatures(clips: DataFrame, cfg: DedupConfig,
     return src.mapInPandas(_run, schema=SIGNED_SCHEMA)
 
 
-def migrate_signed(signed: DataFrame, cfg: DedupConfig) -> DataFrame | None:
-    """Bring a stored `signed` table written by a pre-r4 layout (no
-    `shingle_hashes` column) up to SIGNED_SCHEMA, or return None if it
-    is already current.
-
-    The column derives purely from `transcript_norm` (which every
-    layout stores), so the migration is one text-only Arrow pass — no
-    audio payload re-decode, no re-scan of the clips source. Without
-    it, resume and run_incremental on an old workdir crash in the
-    edges stage, and CheckpointStore.append (which aligns new rows to
-    the EXISTING table's columns) would silently re-drop the column
-    forever. The caller must REWRITE the stage table with the result
-    (see DedupPipeline._signed_current), not just use it in-flight."""
-    if "shingle_hashes" in signed.columns:
-        return None
-    k = cfg.shingle_k
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _shh(norm: pd.Series) -> pd.Series:
-        return pd.Series([shingle_hash_set(s, k) for s in norm],
-                         dtype=object)
-
-    out = signed.withColumn("shingle_hashes", _shh(F.col("transcript_norm")))
-    return out.select(*[f.name for f in SIGNED_SCHEMA])
+def require_signed_layout(signed: DataFrame) -> DataFrame:
+    """Return a stored `signed` table unchanged, or fail loudly if it
+    predates the SIGNED_SCHEMA layout (no `shingle_hashes`): the edges
+    stage needs the column, and CheckpointStore.append (which aligns
+    new rows to the existing table's columns) would drop it from every
+    later batch."""
+    if "shingle_hashes" not in signed.columns:
+        raise ValueError(
+            "stored `signed` table lacks `shingle_hashes` (written by an "
+            "older layout); re-run from scratch: run(clips, resume=False) "
+            "in a fresh workdir")
+    return signed

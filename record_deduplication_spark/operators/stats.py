@@ -5,8 +5,6 @@ Reference analogs:
 - R2 probability banding (/root/reference/src/core/reporting_engine.py:104-117)
 - G2 group materialization / survivor choice
   (/root/reference/src/core/openai_deduplicator.py:174-218)
-- C6 max-cluster-size subdivision (driver loop over Spark jobs,
-  /root/reference/src/core/clustering/hierarchical/adaptive_clusterer_v3.py:31-112)
 
 All single-pass aggregations (partial+final hash agg) — silhouette is
 intentionally dropped (O(n^2), geometric; SURVEY §2.6 C14).
@@ -14,24 +12,39 @@ intentionally dropped (O(n^2), geometric; SURVEY §2.6 C14).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_rows_df
 
 
+#: Regex of a noise cluster label: -1, also after a float promotion
+#: ("-1.0": a pandas/parquet round-trip can turn densified long ids into
+#: float64). NULL is noise too. The one noise rule shared by the SQL
+#: predicates below and the Python kernels (`is_noise_label`).
+NOISE_LABEL = r"^-1(\.0)?$"
+_NOISE_RE = re.compile(NOISE_LABEL)
+
+
+def is_noise_label(label) -> bool:
+    """Python twin of `is_noise` for one label."""
+    return label is None or _NOISE_RE.match(str(label)) is not None
+
+
 def clustered(col: str = "cluster_id"):
     """Predicate: row belongs to a real cluster. Handles BOTH cluster-id
     conventions — densified long with -1 noise (reference C15 fillna,
-    /root/reference/src/core/clustering_engine.py:527-529) and the
+    clustering_engine.py:527-529), also float-promoted to -1.0, and the
     engine-default string representative with NULL noise."""
     c = F.col(col)
-    return c.isNotNull() & (c.cast("string") != "-1")
+    return c.isNotNull() & ~c.cast("string").rlike(NOISE_LABEL)
 
 
 def is_noise(col: str = "cluster_id"):
     c = F.col(col)
-    return c.isNull() | (c.cast("string") == "-1")
+    return c.isNull() | c.cast("string").rlike(NOISE_LABEL)
 
 
 def cluster_stats(clusters: DataFrame) -> dict:
@@ -98,19 +111,6 @@ def unique_records(all_ids: DataFrame, clusters: DataFrame) -> DataFrame:
              .select("clip_id", F.lit(False).alias("is_merged"),
                      F.array().cast("array<string>").alias("merged_from")))
     return noise.unionByName(survivors)
-
-
-def subdivide_kmeans(clusters: DataFrame, features: DataFrame,
-                     max_size: int, feature_col: str = "embedding",
-                     seed: int = 42) -> DataFrame:
-    """C7-analog: see operators/subdivide.subdivide_kmeans (per-group
-    seeded KMeans inside ONE applyInPandas job for all oversized
-    clusters + ONE merge join — replaces the former per-cluster
-    driver loop whose chained joins grew plan depth O(#oversized)).
-    Kept here as a re-export for the stats-module API."""
-    from .subdivide import subdivide_kmeans as _impl
-    return _impl(clusters, features, max_size,
-                 feature_col=feature_col, seed=seed)
 
 
 def validate_connectivity(edges: DataFrame, clusters: DataFrame) -> int:
@@ -188,39 +188,6 @@ def expand_pairs(pairs: DataFrame, records: DataFrame,
     return pairs.join(side(1), "id_1").join(side(2), "id_2")
 
 
-def subdivide_oversized(clusters: DataFrame, max_size: int,
-                        salt_buckets: int | None = None) -> DataFrame:
-    """C6/C10-analog guaranteed-progress control of max cluster size:
-    deterministic hash-bucket split of oversized clusters (the
-    reference's ForceStrategy last resort, SURVEY §2.6 C10). Returns a
-    new assignment with suffix-bucketed cluster ids.
-
-    This is a driver-free single pass (no loop needed): the bucket is
-    a ROUND-ROBIN row_number split, so with k = ceil(size/max_size)
-    every bucket holds <= max_size members BY CONSTRUCTION. A hash
-    split (pmod(xxhash64(id), k)) carries no such bound — all members
-    of a cluster can deterministically collide into one bucket and
-    never unstick on retry (the bug subdivide_force's docstring
-    documents)."""
-    sizes = (clusters.where(clustered())
-             .groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size")))
-    joined = clusters.join(sizes, "cluster_id", "left")
-    k = salt_buckets
-    rn = F.row_number().over(
-        Window.partitionBy("cluster_id").orderBy("clip_id")) - 1
-    bucket = F.when(
-        F.col("size") > max_size,
-        F.pmod(rn,
-               F.lit(k) if k else F.ceil(F.col("size") / max_size).cast("long")))
-    return joined.select(
-        "clip_id",
-        F.when(is_noise(), F.col("cluster_id").cast("string"))
-         .when(bucket.isNotNull(),
-               F.concat_ws("_", F.col("cluster_id"), bucket))
-         .otherwise(F.col("cluster_id").cast("string"))
-         .alias("cluster_key"))
-
-
 _YJ_EPS = 1e-9
 
 
@@ -295,8 +262,8 @@ def cluster_agreement(ref: DataFrame, test: DataFrame,
     and pairs(ref AND test) = sum over the JOINT contingency table
     (one id-join + one groupBy) — O(n) rows shuffled total, hot
     clusters are just bigger counts, never bigger joins. Noise
-    (cluster_id NULL, or the "-1" label — see clustered()) contributes
-    no pairs on its side.
+    (cluster_id NULL, or the "-1"/"-1.0" label — see clustered())
+    contributes no pairs on its side.
 
     Returns one row: (n_pairs_ref, n_pairs_test, n_pairs_both,
     precision, recall, f1) where precision/recall grade `test`

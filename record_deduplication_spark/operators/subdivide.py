@@ -1,13 +1,13 @@
 """Hierarchical subdivision of oversized clusters (C6-C13).
 
-Reference analogs (SURVEY.md §2.6):
+Reference analogs (SURVEY.md §2.6; paths under the reference's
+src/core/clustering/hierarchical/):
 
 - C6 adaptive while-loop driver — while any cluster > max_size, with
   depth <= 20, wall-clock timeout and a no-progress break
-  (/root/reference/src/core/clustering/hierarchical/adaptive_clusterer_v3.py:31-112).
+  (adaptive_clusterer_v3.py:31-112).
 - C8 SmartDBSCAN — progressive eps ladder [1, .7, .5, .3] with a
-  0.8^depth depth factor
-  (/root/reference/src/core/clustering/hierarchical/subdivision_engine_v3.py:357-445).
+  0.8^depth depth factor (subdivision_engine_v3.py:357-445).
 - C9 AggressivePCA — harsher ladder [.1, .05, .03, .01] * 0.5^depth for
   persistent clusters (size >= 500, depth >= 3)
   (subdivision_engine_v3.py:448-519).
@@ -18,7 +18,7 @@ Reference analogs (SURVEY.md §2.6):
   of the time budget" fast path of the reference's strategy hint
   (adaptive_clusterer_v3.py:195-212).
 - C13 adaptive depth threshold schedule — 30%/60%/100% progression
-  (/root/reference/src/core/clustering/hierarchical/adaptive_threshold.py:16-71).
+  (adaptive_threshold.py:16-71).
 
 Spark-first shape
 -----------------
@@ -26,28 +26,37 @@ The reference re-runs DBSCAN at ever-smaller eps inside each oversized
 cluster. Our similarity-space analog re-runs **connected components
 over the cluster's internal dup edges at progressively stricter score
 thresholds** (an eps ladder in 1-score space) — similarity-aware
-splitting with no geometric embedding needed. Two scale properties the
-reference's per-cluster python loop lacks:
+splitting with no geometric embedding needed.
 
-- every ladder rung processes ALL still-unsplit oversized clusters in
-  ONE distributed job (edges are tagged with their cluster; components
-  cannot cross clusters because only intra-cluster edges are kept);
-- KMeans runs per-group inside `applyInPandas` (one distributed job
-  for all oversized clusters, Arrow batches, fit-on-sample like the
-  reference) instead of a serial driver-side fit per cluster.
+Every strategy is a pure per-cluster kernel (`_ladder_split`,
+`_kmeans_split`, `_force_split`, and the C6 loop `_adaptive_split`),
+and `_per_cluster` is the only place that talks to Spark: it runs a
+kernel once per oversized base cluster in ONE cogrouped
+`applyInPandas` over the cluster's members and its intra-cluster
+edges, checkpoints the result once and applies it with one merge
+join. The job count is therefore constant — it does not grow with the
+number of ladder rungs, strategies or depth levels.
+
+Group contract: one task holds one oversized base cluster — its
+members (sorted by clip_id), their feature vectors (64-dim in the
+pipeline) and its intra-cluster edges. Every split stays inside its
+base cluster, so sub-clusters never need a second shuffle.
 
 Cluster-key contract: assignments are (clip_id, cluster_key STRING);
-noise is NULL or "-1" (both conventions accepted, see
-`operators.stats.clustered`). Sub-clusters get hierarchical keys
-"<parent>.<min-member-id>" (ladder), "<parent>_k<bucket>" (kmeans) or
-"<parent>_f<bucket>" (force) — deterministic, derived from member ids,
-never from nondeterministic counters.
+noise is NULL or "-1"/"-1.0" (see `operators.stats.NOISE_LABEL`).
+Sub-clusters get hierarchical keys "<parent>.<min-member-id>"
+(ladder), "<parent>_k<bucket>" (kmeans) or "<parent>_f<bucket>"
+(force) — deterministic, derived from member ids, never from
+nondeterministic counters.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import time
+from collections import defaultdict
+from functools import partial
 from typing import Iterable
 
 import numpy as np
@@ -56,9 +65,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
-from ..functions.localrel import local_rows_df
-from .cc import connected_components
-from .stats import clustered
+from .cc import uf_find, uf_union
+from .stats import clustered, is_noise_label
 
 
 # --------------------------------------------------------------------------
@@ -120,187 +128,32 @@ def ladder_thresholds(depth: int, start_threshold: float,
 
 
 # --------------------------------------------------------------------------
-# C8/C9 executor: threshold-ladder CC re-run (all clusters in one job/rung)
+# Per-cluster kernels: each maps one cluster's members to new keys
 # --------------------------------------------------------------------------
 
-def _norm_assign(clusters: DataFrame, cluster_col: str) -> DataFrame:
-    return clusters.select(
-        "clip_id", F.col(cluster_col).cast("string").alias("cluster_key"))
-
-
-def _oversized_keys(assign: DataFrame, max_size: int) -> DataFrame:
-    return (assign.where(clustered("cluster_key"))
-            .groupBy("cluster_key").agg(F.count(F.lit(1)).alias("size"))
-            .where(F.col("size") > max_size)
-            .select("cluster_key"))
-
-
-def _merge_assign(assign: DataFrame, new: DataFrame) -> DataFrame:
-    """Apply sub-assignments (clip_id, new_key, _sub=true marker) onto
-    the full assignment with ONE left join (constant plan depth
-    regardless of how many clusters were split)."""
-    return (assign.join(new, "clip_id", "left")
-            .select("clip_id",
-                    F.when(F.col("_sub") == F.lit(True), F.col("new_key"))
-                     .otherwise(F.col("cluster_key")).alias("cluster_key")))
-
-
-def _ladder_driver(assign: DataFrame, members: DataFrame, intra: DataFrame,
-                   thresholds: Iterable[float],
-                   singletons_to_noise: bool) -> DataFrame:
-    """Small-graph ladder: one collect, all rungs driver-side.
-
-    Semantics mirror the distributed loop exactly: per cluster, walk
-    the rungs in order; at each rung, union-find over the cluster's
-    edges with score >= t (root = lexicographic min clip_id via the
-    SHARED operators/cc uf helpers); accept the first rung with >= 2
-    components. NULL-score and self-loop edges are dropped, exactly as
-    the distributed regime's `_score >= t` filter and cc's
-    `src != dst` filter drop them. Members untouched at the accepted
-    rung are singletons (noise or parent key). Clusters no rung splits
-    are left out of the merge and keep their key."""
-    from collections import defaultdict
-
-    from .cc import uf_find, uf_union
-
-    thresholds = list(thresholds)  # re-walked once PER CLUSTER: a
-    # one-shot iterable would silently give every cluster after the
-    # first zero rungs
-    by_ck: dict[str, list] = defaultdict(list)
-    for ck, i1, i2, s in intra.collect():
-        # NULL score: `_score >= t` is NULL -> dropped distributed;
-        # self-loop: dropped by cc's src != dst — match both here
-        if s is not None and i1 != i2:
-            by_ck[ck].append((i1, i2, s))
-
-    accepted_rows: list[tuple[str, str]] = []   # (clip_id, new_key)
-    accepted_keys: list[str] = []
-    for ck, es in by_ck.items():
-        for t in thresholds:
-            parent: dict[str, str] = {}
-            for i1, i2, s in es:
-                if s >= t:
-                    uf_union(parent, i1, i2)
-            roots = {x: uf_find(parent, x) for x in parent}
-            if len(set(roots.values())) >= 2:
-                accepted_keys.append(ck)
-                accepted_rows.extend(
-                    (cid, f"{ck}.{root}") for cid, root in roots.items())
-                break
-
-    if not accepted_keys:
-        return assign
-    spark = assign.sparkSession
-    # Arrow overload with an explicit schema, NOT local_rows_df:
-    # vertices of accepted clusters can approach 2 x
-    # cc_driver_max_edges, and local_rows_df's single-partition output
-    # would bottleneck the member join at that top end
-    comps = spark.createDataFrame(
-        pd.DataFrame(accepted_rows, columns=["clip_id", "new_key"]),
-        "clip_id string, new_key string")
-    acc_keys = local_rows_df(spark, [(k,) for k in accepted_keys],
-                             "cluster_key string")
-    acc = (members.join(F.broadcast(acc_keys), "cluster_key", "leftsemi")
-           .join(comps, "clip_id", "left")
-           .select("clip_id",
-                   F.when(F.col("new_key").isNotNull(), F.col("new_key"))
-                    .otherwise(None if singletons_to_noise
-                               else F.col("cluster_key")).alias("new_key"),
-                   F.lit(True).alias("_sub")))
-    return _merge_assign(assign, acc.localCheckpoint(eager=True))
-
-
-def subdivide_ladder(clusters: DataFrame, edges: DataFrame, max_size: int,
-                     thresholds: Iterable[float],
-                     cfg: DedupConfig = DEFAULT_CONFIG,
-                     score_col: str = "score",
-                     cluster_col: str = "cluster_id",
-                     singletons_to_noise: bool = True) -> DataFrame:
-    """C8/C9 core: re-run connected components over each oversized
-    cluster's internal edges at progressively stricter score
-    thresholds; accept the FIRST rung that splits a cluster into >= 2
-    sub-components (reference accepts the first eps with n_clusters
-    >= 2, subdivision_engine_v3.py:417-441).
-
-    All oversized clusters ride the same distributed jobs; a cluster
-    leaves the ladder as soon as one rung splits it. Members discon-
-    nected at the accepted rung mirror the reference's DBSCAN-noise
-    relabeling: NULL (noise) when `singletons_to_noise`, else kept in
-    their parent cluster.
-
-    Returns the full assignment (clip_id, cluster_key); split members
-    get "<parent>.<sub-representative>" keys. Clusters no rung can
-    split keep their key (caller falls through to KMeans/force).
-
-    Two execution regimes with identical output (pinned by
-    tests/test_subdivide.py::test_ladder_driver_matches_distributed):
-
-    * intra edge count <= cfg.cc_driver_max_edges: ONE collect of the
-      (already checkpointed) intra edge set and the whole rung ladder
-      runs driver-side — the same small-graph contract as
-      operators/cc._driver_union_find, which the distributed loop
-      would otherwise re-enter once per rung, re-collecting the SAME
-      edges every time (a ladder that never splits pays
-      len(thresholds) collects + checkpoints for one answer);
-    * larger: the original per-rung distributed loop (each rung one
-      CC job over the shared checkpoint — never a job per cluster).
-    """
-    assign = _norm_assign(clusters, cluster_col)
-    target = _oversized_keys(assign, max_size).localCheckpoint(eager=True)
-    if target.isEmpty():
-        return assign
-
-    a1 = assign.select(F.col("clip_id").alias("id_1"),
-                       F.col("cluster_key").alias("ck1"))
-    a2 = assign.select(F.col("clip_id").alias("id_2"),
-                       F.col("cluster_key").alias("ck2"))
-    intra = (edges.select("id_1", "id_2", F.col(score_col).alias("_score"))
-             .join(a1, "id_1").join(a2, "id_2")
-             .where(F.col("ck1") == F.col("ck2"))
-             .join(target.withColumnRenamed("cluster_key", "ck1"),
-                   "ck1", "leftsemi")
-             .select(F.col("ck1").alias("cluster_key"), "id_1", "id_2", "_score")
-             .localCheckpoint(eager=True))  # reused by every rung
-    members = (assign.join(target, "cluster_key", "leftsemi")
-               .localCheckpoint(eager=True))
-
-    if intra.count() <= cfg.cc_driver_max_edges:
-        return _ladder_driver(assign, members, intra, thresholds,
-                              singletons_to_noise)
-
-    remaining = target
-    accepted = None
+def _ladder_split(key: str, ids: list[str], edges: list[tuple],
+                  thresholds: list[float],
+                  singletons_to_noise: bool = True) -> list | None:
+    """C8/C9 kernel: walk the rungs in order; at each, union-find over
+    the edges with score >= t (root = lexicographic min member, the
+    shared operators/cc helpers) and accept the FIRST rung with >= 2
+    components (the reference accepts the first eps with n_clusters
+    >= 2, subdivision_engine_v3.py:417-441). `edges` are the cluster's
+    valid intra edges (no NULL score, no self-loop). Members no edge
+    touches at the accepted rung mirror DBSCAN-noise relabeling: NULL,
+    or the parent key when not `singletons_to_noise`. Returns the new
+    keys aligned with `ids`, or None when no rung splits."""
     for t in thresholds:
-        if remaining.isEmpty():
-            break
-        e_t = (intra.join(remaining, "cluster_key", "leftsemi")
-               .where(F.col("_score") >= F.lit(t)))
-        comps = connected_components(e_t.select("id_1", "id_2"), cfg)
-        mem = members.join(remaining, "cluster_key", "leftsemi")
-        sub = mem.join(comps, "clip_id", "left")  # component NULL = singleton
-        n_sub = (sub.where(F.col("component").isNotNull())
-                 .groupBy("cluster_key")
-                 .agg(F.countDistinct("component").alias("n_sub")))
-        ok = n_sub.where(F.col("n_sub") >= 2).select("cluster_key")
-        acc = (sub.join(ok, "cluster_key", "leftsemi")
-               .select("clip_id",
-                       F.when(F.col("component").isNotNull(),
-                              F.concat_ws(".", "cluster_key", "component"))
-                        .otherwise(None if singletons_to_noise
-                                   else F.col("cluster_key")).alias("new_key"),
-                       F.lit(True).alias("_sub")))
-        accepted = acc if accepted is None else accepted.unionByName(acc)
-        remaining = (remaining.join(ok, "cluster_key", "left_anti")
-                     .localCheckpoint(eager=True))
+        parent: dict[str, str] = {}
+        for a, b, s in edges:
+            if s >= t:
+                uf_union(parent, a, b)
+        roots = {x: uf_find(parent, x) for x in parent}
+        if len(set(roots.values())) >= 2:
+            miss = None if singletons_to_noise else key
+            return [f"{key}.{roots[i]}" if i in roots else miss for i in ids]
+    return None
 
-    if accepted is None:
-        return assign
-    return _merge_assign(assign, accepted.localCheckpoint(eager=True))
-
-
-# --------------------------------------------------------------------------
-# C7: per-group KMeans inside applyInPandas
-# --------------------------------------------------------------------------
 
 def _kmeans_fit_predict(X: np.ndarray, k: int, seed: int,
                         sample_max: int = 5000, iters: int = 20) -> np.ndarray:
@@ -340,6 +193,264 @@ def _kmeans_fit_predict(X: np.ndarray, k: int, seed: int,
     return d2_to(X, C).argmin(1)
 
 
+def _kmeans_split(key: str, fv: list, max_size: int, seed: int,
+                  sample_max: int = 5000) -> list:
+    """C7 kernel: seeded KMeans with k = ceil(n / max_size) over the
+    members that have a feature vector; members without one (missing
+    row or NULL vector) keep `key`."""
+    have = [i for i, v in enumerate(fv) if v is not None]
+    out = [key] * len(fv)
+    if have:
+        X = np.vstack([fv[i] for i in have]).astype(np.float64)
+        k = min(math.ceil(len(have) / max_size), len(have))
+        for i, b in zip(have, _kmeans_fit_predict(X, k, seed, sample_max)):
+            out[i] = f"{key}_k{b}"
+    return out
+
+
+def _force_split(key: str, n: int, max_size: int) -> list:
+    """C10 kernel: round-robin over the members (sorted by clip_id)
+    into ceil(n / max_size) buckets — always makes progress AND always
+    bounds the result, since every bucket gets floor/ceil(n/k)
+    members. The reference's PCA+KMeans is replaced because guaranteed
+    progress is the only contract here; a hash split is NOT
+    guaranteed (all members of a small cluster can collide into one
+    bucket, and being deterministic it would never unstick)."""
+    nb = math.ceil(n / max_size)
+    return [f"{key}_f{r % nb}" for r in range(n)]
+
+
+def _by_key(keys: list) -> dict[str, list[int]]:
+    """Member indices per clustered key (noise keys excluded)."""
+    out: dict[str, list[int]] = defaultdict(list)
+    for i, k in enumerate(keys):
+        if not is_noise_label(k):
+            out[k].append(i)
+    return out
+
+
+def _adaptive_split(key: str, ids: list[str], fv: list, edges: list[tuple],
+                    *, max_size: int, base_threshold: float, high: float,
+                    max_depth: int, timeout_s: float, t0: float,
+                    force_above: int, seed: int, use_force: bool,
+                    has_features: bool) -> tuple[list, dict]:
+    """C6 kernel: the adaptive loop for ONE base cluster. While any of
+    its keys exceeds max_size — depth < max_depth, wall-clock budget
+    measured from `t0`, no-progress break (reference loop shape at
+    adaptive_clusterer_v3.py:71-104) — split each oversized key with
+    the reference's strategy priority:
+
+      force          keys > force_above members, or > 70% of the time
+                     budget spent (strategy hint,
+                     adaptive_clusterer_v3.py:195-212)
+      ladder smart   C8 rungs from the C13 depth schedule
+      ladder aggr.   C9 rungs, for persistent keys
+                     (depth >= 3, size >= 500 — C9 can_handle)
+      kmeans         keys the ladders could not split, when
+                     `has_features`
+      force          last resort (guaranteed progress) when allowed
+
+    Returns (keys aligned with `ids`, trace) where trace holds one
+    [depth, n_oversized, usage, subdivisions_made] row per level and
+    the stop reason; subdivide_adaptive sums the traces into stats."""
+    keys: list = [key] * len(ids)
+    pos = {c: i for i, c in enumerate(ids)}
+    levels: list = []
+    stopped = "max_depth"
+    for depth in range(max_depth):
+        elapsed = time.time() - t0
+        if elapsed > timeout_s:
+            stopped = "timeout"
+            break
+        groups = _by_key(keys)
+        over = {k: len(ix) for k, ix in groups.items() if len(ix) > max_size}
+        if not over:
+            stopped = "converged"
+            break
+        usage: dict[str, int] = {}
+
+        def put(k: str, new: list) -> None:
+            for i, nk in zip(groups[k], new):
+                keys[i] = nk
+
+        def force(ks: Iterable[str]) -> None:
+            for k in ks:
+                put(k, _force_split(k, len(groups[k]), max_size))
+
+        def ladder(ks: list[str], kind: str) -> set[str]:
+            """Split each key in `ks` over its intra edges; return the
+            keys no rung split."""
+            rungs = ladder_thresholds(
+                depth, adaptive_threshold(depth, base_threshold, high), kind)
+            want, intra = set(ks), defaultdict(list)
+            for a, b, s in edges:
+                ka = keys[pos[a]]
+                if ka in want and keys[pos[b]] == ka:
+                    intra[ka].append((a, b, s))
+            unsplit = set()
+            for k in ks:
+                new = _ladder_split(k, [ids[i] for i in groups[k]],
+                                    intra[k], rungs)
+                if new is None:
+                    unsplit.add(k)
+                else:
+                    put(k, new)
+            return unsplit
+
+        hurry = elapsed > 0.7 * timeout_s
+        forced = [k for k, s in over.items()
+                  if use_force and (s > force_above or hurry)]
+        laddered = [k for k in over if k not in set(forced)]
+        if forced:
+            force(forced)
+            usage["force"] = len(forced)
+        if laddered:
+            still = ladder(laddered, "smart")
+            usage["ladder_smart"] = len(laddered) - len(still)
+            aggr = [k for k in still if depth >= 3 and over[k] >= 500]
+            if aggr:
+                rem = ladder(aggr, "aggressive")
+                usage["ladder_aggressive"] = len(aggr) - len(rem)
+                still = (still - set(aggr)) | rem
+            if still and has_features:
+                targets = sorted(still)
+                for t in targets:
+                    put(t, _kmeans_split(t, [fv[i] for i in groups[t]],
+                                         max_size, seed))
+                # KMeans is NOT guaranteed to split (identical feature
+                # vectors collapse every center onto one point: every
+                # member lands in bucket "<key>_k0", RENAMED but not
+                # split) — check the targets AND their _k descendants,
+                # and route survivors to force
+                groups = _by_key(keys)
+                over2 = {k for k, ix in groups.items() if len(ix) > max_size}
+                tset = set(targets)
+                still = {k for k in over2
+                         if k in tset
+                         or any(k.startswith(t + "_k") for t in tset)}
+                # usage counts progressed TARGETS (one target can leave
+                # several oversized _k children in `still`)
+                unresolved = {t for t in tset
+                              if t in over2
+                              or any(k.startswith(t + "_k") for k in over2)}
+                usage["kmeans"] = len(targets) - len(unresolved)
+            if still and use_force:
+                force(sorted(still))
+                usage["force"] = usage.get("force", 0) + len(still)
+        made = sum(usage.values())
+        levels.append([depth, len(over), usage, made])
+        if made == 0:
+            stopped = "no_progress"
+            break
+    return keys, {"levels": levels, "stopped": stopped}
+
+
+# --------------------------------------------------------------------------
+# Spark plumbing: one cogrouped applyInPandas per call
+# --------------------------------------------------------------------------
+
+def _per_cluster(clusters: DataFrame, max_size: int, kernel,
+                 cluster_col: str = "cluster_id",
+                 edges: DataFrame | None = None, score_col: str = "score",
+                 features: DataFrame | None = None,
+                 feature_col: str = "embedding"
+                 ) -> tuple[DataFrame, DataFrame]:
+    """Run `kernel(key, ids, fv, edges) -> (new_keys, trace | None)`
+    once per base cluster with more than `max_size` members.
+
+    `ids` are the cluster's members sorted by clip_id, `fv` their
+    feature vectors (None where missing) and `edges` its intra-cluster
+    (id_1, id_2, score) edges minus NULL scores and self-loops. All
+    oversized clusters ride ONE cogrouped applyInPandas; its output is
+    checkpointed once and merged with one left join.
+
+    Returns (full assignment (clip_id, cluster_key), checkpointed
+    `trace` rows — one JSON string per group that returned a trace)."""
+    assign = clusters.select(
+        "clip_id", F.col(cluster_col).cast("string").alias("cluster_key"))
+    big = (assign.where(clustered("cluster_key"))
+           .groupBy("cluster_key").agg(F.count(F.lit(1)).alias("_n"))
+           .where(F.col("_n") > max_size).select("cluster_key"))
+    members = assign.join(big, "cluster_key", "leftsemi")
+    if features is None:
+        members = members.withColumn("_fv", F.lit(None).cast("array<double>"))
+    else:
+        members = members.join(
+            features.select("clip_id", F.col(feature_col)
+                            .cast("array<double>").alias("_fv")),
+            "clip_id", "left")
+    if edges is None:
+        intra = assign.sparkSession.createDataFrame(
+            [], "cluster_key string, id_1 string, id_2 string, _score double")
+    else:
+        # fresh column names: cogrouping `members` with a frame
+        # derived from it would otherwise be an ambiguous self-join
+        m1 = members.select(F.col("clip_id").alias("id_1"),
+                            F.col("cluster_key").alias("_ck"))
+        m2 = members.select(F.col("clip_id").alias("id_2"),
+                            F.col("cluster_key").alias("_ck"))
+        intra = (edges.select("id_1", "id_2", F.col(score_col)
+                              .cast("double").alias("_score"))
+                 .join(m1, "id_1").join(m2, ["id_2", "_ck"])
+                 .select(F.col("_ck").alias("cluster_key"),
+                         "id_1", "id_2", "_score"))
+
+    def run(m: pd.DataFrame, e: pd.DataFrame) -> pd.DataFrame:
+        m = m.sort_values("clip_id").reset_index(drop=True)
+        e = e[e["_score"].notna() & (e["id_1"] != e["id_2"])]
+        keys, trace = kernel(m["cluster_key"].iloc[0], m["clip_id"].tolist(),
+                             m["_fv"].tolist(),
+                             list(zip(e["id_1"], e["id_2"], e["_score"])))
+        out = pd.DataFrame({"clip_id": m["clip_id"], "new_key": keys,
+                            "trace": None})
+        if trace is not None:
+            out.loc[len(out)] = [None, None, json.dumps(trace)]
+        return out
+
+    out = (members.select("cluster_key", "clip_id", "_fv")
+           .groupBy("cluster_key").cogroup(intra.groupBy("cluster_key"))
+           .applyInPandas(run, "clip_id string, new_key string, trace string")
+           .localCheckpoint(eager=True))
+    # the _sub marker tells a NULL new_key (split off as noise) from a
+    # member outside every oversized cluster
+    sub = out.where(F.col("clip_id").isNotNull()).select(
+        "clip_id", "new_key", F.lit(True).alias("_sub"))
+    merged = (assign.join(sub, "clip_id", "left")
+              .select("clip_id", F.when(F.col("_sub"), F.col("new_key"))
+                      .otherwise(F.col("cluster_key")).alias("cluster_key")))
+    return merged, out.where(F.col("trace").isNotNull())
+
+
+# --------------------------------------------------------------------------
+# Public operators
+# --------------------------------------------------------------------------
+
+def subdivide_ladder(clusters: DataFrame, edges: DataFrame, max_size: int,
+                     thresholds: Iterable[float],
+                     score_col: str = "score",
+                     cluster_col: str = "cluster_id",
+                     singletons_to_noise: bool = True) -> DataFrame:
+    """C8/C9: re-run connected components over each oversized
+    cluster's internal edges at progressively stricter score
+    thresholds and accept the FIRST rung that splits it into >= 2
+    sub-components (`_ladder_split`). Members disconnected at the
+    accepted rung become NULL (noise) when `singletons_to_noise`, else
+    stay in their parent cluster.
+
+    Returns the full assignment (clip_id, cluster_key); split members
+    get "<parent>.<sub-representative>" keys. Clusters no rung can
+    split keep their key (the adaptive loop falls through to
+    KMeans/force)."""
+    rungs = list(thresholds)
+
+    def kernel(key, ids, fv, es):
+        new = _ladder_split(key, ids, es, rungs, singletons_to_noise)
+        return (new if new is not None else [key] * len(ids)), None
+
+    return _per_cluster(clusters, max_size, kernel, cluster_col,
+                        edges=edges, score_col=score_col)[0]
+
+
 def subdivide_kmeans(clusters: DataFrame, features: DataFrame,
                      max_size: int, feature_col: str = "embedding",
                      seed: int = 42, sample_max: int = 5000,
@@ -348,88 +459,24 @@ def subdivide_kmeans(clusters: DataFrame, features: DataFrame,
     KMeans (k = ceil(size / max_size)) over a per-record feature
     vector — the reference's FastKMeans subdivision
     (subdivision_engine_v3.py:264-354, fit-on-sample predict-on-all).
+    Members without features keep their cluster."""
+    def kernel(key, ids, fv, es):
+        return _kmeans_split(key, fv, max_size, seed, sample_max), None
 
-    One `applyInPandas` job fits ALL oversized clusters (each group
-    sorted by clip_id for determinism), then ONE left join applies the
-    sub-assignments — constant plan depth and no serial driver-side
-    fits (the previous per-cluster chained-join loop grew lineage
-    O(#oversized clusters)).
+    return _per_cluster(clusters, max_size, kernel, cluster_col,
+                        features=features, feature_col=feature_col)[0]
 
-    Members without features keep their cluster. Groups land wholly in
-    one task (applyInPandas contract): route clusters beyond ~1e6
-    members through `subdivide_force`/`subdivide_ladder` first — the
-    adaptive loop's `force_above` guard does exactly that."""
-    assign = _norm_assign(clusters, cluster_col)
-    big = _oversized_keys(assign, max_size)
-    mem = (assign.join(big, "cluster_key", "leftsemi")
-           .join(features.select("clip_id",
-                                 F.col(feature_col).cast("array<double>")
-                                 .alias("_fv")), "clip_id")
-           # a feature ROW with a NULL vector must behave like a missing
-           # row ("members without features keep their cluster"), not
-           # crash np.vstack in the executor
-           .where(F.col("_fv").isNotNull()))
-
-    def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("clip_id").reset_index(drop=True)
-        X = np.vstack(pdf["_fv"].to_numpy()).astype(np.float64)
-        k = min(math.ceil(len(pdf) / max_size), len(pdf))
-        lab = _kmeans_fit_predict(X, k, seed, sample_max)
-        key = pdf["cluster_key"].iloc[0]
-        return pd.DataFrame({
-            "clip_id": pdf["clip_id"],
-            "new_key": [f"{key}_k{b}" for b in lab],
-        })
-
-    sub = (mem.groupBy("cluster_key")
-           .applyInPandas(fit_group, schema="clip_id string, new_key string")
-           .withColumn("_sub", F.lit(True)))
-    return _merge_assign(assign, sub)
-
-
-# --------------------------------------------------------------------------
-# C10: guaranteed-progress force split
-# --------------------------------------------------------------------------
 
 def subdivide_force(clusters: DataFrame, max_size: int,
                     cluster_col: str = "cluster_id") -> DataFrame:
     """C10 ForceStrategy analog: deterministic round-robin split of
-    every oversized cluster into ceil(size/max_size) buckets — always
-    makes progress AND always bounds the result (every bucket gets
-    floor/ceil(size/k) members), one distributed pass, no loop
-    (subdivision_engine_v3.py:522-598; the reference's PCA+KMeans is
-    replaced because guaranteed progress is the only contract here —
-    a hash split is NOT guaranteed: all members of a small cluster can
-    collide into one bucket, and being deterministic it would never
-    unstick).
+    every oversized cluster into ceil(size/max_size) buckets of at most
+    max_size members (`_force_split`; subdivision_engine_v3.py:522-598)."""
+    def kernel(key, ids, fv, es):
+        return _force_split(key, len(ids), max_size), None
 
-    The row_number window is partitioned BY CLUSTER — each oversized
-    cluster sorts within one task. Bounded by the adaptive loop's
-    `force_above` routing at sane sizes; a pathological single cluster
-    of ~10^8+ members would need a two-level split (hash pre-salt,
-    then round-robin within salt)."""
-    from pyspark.sql import Window
+    return _per_cluster(clusters, max_size, kernel, cluster_col)[0]
 
-    assign = _norm_assign(clusters, cluster_col)
-    big = (assign.where(clustered("cluster_key"))
-           .groupBy("cluster_key").agg(F.count(F.lit(1)).alias("size"))
-           .where(F.col("size") > max_size))
-    # window only over the oversized clusters' members (semi-join
-    # first), never a sort of the whole assignment
-    members = assign.join(big, "cluster_key")
-    rn = F.row_number().over(
-        Window.partitionBy("cluster_key").orderBy("clip_id")) - 1
-    bucket = F.pmod(rn, F.ceil(F.col("size") / max_size).cast("long"))
-    sub = members.select(
-        "clip_id",
-        F.concat(F.col("cluster_key"), F.lit("_f"), bucket).alias("new_key"),
-        F.lit(True).alias("_sub"))
-    return _merge_assign(assign, sub)
-
-
-# --------------------------------------------------------------------------
-# C6: adaptive driver loop
-# --------------------------------------------------------------------------
 
 def subdivide_adaptive(clusters: DataFrame, edges: DataFrame, max_size: int,
                        features: DataFrame | None = None,
@@ -444,145 +491,48 @@ def subdivide_adaptive(clusters: DataFrame, edges: DataFrame, max_size: int,
                        use_force: bool = True,
                        cluster_col: str = "cluster_id",
                        ) -> tuple[DataFrame, dict]:
-    """C6: while any cluster exceeds max_size — depth <= max_depth,
-    wall-clock budget, no-progress break (reference loop shape at
-    adaptive_clusterer_v3.py:71-104) — subdivide each level with the
-    reference's strategy priority:
+    """C6: size-bound every cluster with the adaptive loop
+    (`_adaptive_split`), run once per oversized base cluster. The stop
+    conditions apply per base cluster, so a cluster's keys never
+    depend on which other clusters are oversized.
 
-      force          clusters > force_above members, or > 70% of the
-                     time budget spent (strategy hint,
-                     adaptive_clusterer_v3.py:195-212)
-      ladder smart   C8 rungs from the C13 depth schedule
-      ladder aggr.   C9 rungs, for persistent clusters
-                     (depth >= 3, size >= 500 — C9 can_handle)
-      kmeans         clusters the ladders could not split, when
-                     `features` are available
-      force          last resort (guaranteed progress) when allowed
-
-    Each level runs O(#strategies) distributed jobs — never a job per
-    cluster. Returns (assignment, stats); stats mirrors the
-    reference's levels/strategy-usage accounting."""
+    Returns (assignment, stats); stats mirrors the reference's
+    levels/strategy-usage accounting, summed over the clusters at each
+    depth: `levels` holds {depth, n_oversized, usage,
+    subdivisions_made} per depth, `stopped` is the most severe
+    per-cluster stop reason (timeout > max_depth > no_progress >
+    converged) and `final_depth` the deepest cluster's level count."""
     t0 = time.time()
     high = cfg.jaccard_threshold if high_threshold is None else high_threshold
-    assign = _norm_assign(clusters, cluster_col).localCheckpoint(eager=True)
-    stats: dict = {"max_cluster_size": max_size, "levels": [],
-                   "total_subdivisions": 0}
+    kernel = partial(_adaptive_split, max_size=max_size,
+                     base_threshold=base_threshold, high=high,
+                     max_depth=max_depth, timeout_s=timeout_s, t0=t0,
+                     force_above=force_above, seed=seed, use_force=use_force,
+                     has_features=features is not None)
+    assign, trace = _per_cluster(clusters, max_size, kernel, cluster_col,
+                                 edges=edges, score_col=score_col,
+                                 features=features, feature_col=feature_col)
+    traces = [json.loads(r.trace) for r in trace.select("trace").collect()]
 
-    for depth in range(max_depth):
-        elapsed = time.time() - t0
-        if elapsed > timeout_s:
-            stats["stopped"] = "timeout"
-            break
-        sizes = (assign.where(clustered("cluster_key"))
-                 .groupBy("cluster_key").agg(F.count(F.lit(1)).alias("size"))
-                 .where(F.col("size") > max_size))
-        over = {r.cluster_key: int(r.size) for r in sizes.collect()}
-        if not over:
-            stats["stopped"] = "converged"
-            break
-        level = {"depth": depth, "n_oversized": len(over), "usage": {}}
-
-        def run(strategy: str, keys: list[str], cur: DataFrame) -> DataFrame:
-            # isin over the oversized-key list: bounded by #oversized
-            # CLUSTERS (metadata, not rows). Chunk-free guard: beyond
-            # ~1k literals codegen'd In-predicates get fragile (see
-            # operators/verify._IDS_PUSHDOWN_MAX), so large lists go
-            # through a semi/anti join instead.
-            if len(keys) <= 1000:
-                in_keys = F.col("cluster_key").isin(keys)
-                tgt = cur.where(in_keys)
-                rest = cur.where(~in_keys | F.col("cluster_key").isNull())
-            else:
-                kdf = local_rows_df(cur.sparkSession,
-                                    [(k,) for k in keys], "cluster_key string")
-                tgt = cur.join(F.broadcast(kdf), "cluster_key", "leftsemi")
-                rest = cur.join(F.broadcast(kdf), "cluster_key", "left_anti")
-            if strategy == "force":
-                done = subdivide_force(tgt, max_size, cluster_col="cluster_key")
-            elif strategy == "kmeans":
-                done = subdivide_kmeans(tgt, features, max_size,
-                                        feature_col=feature_col, seed=seed,
-                                        cluster_col="cluster_key")
-            else:
-                t_d = adaptive_threshold(depth, base_threshold, high)
-                rungs = ladder_thresholds(depth, t_d, kind=strategy)
-                done = subdivide_ladder(tgt, edges, max_size, rungs, cfg,
-                                        score_col=score_col,
-                                        cluster_col="cluster_key")
-            return rest.unionByName(done)
-
-        def still_oversized(cur: DataFrame, keys: list[str]) -> set:
-            # same >1k-literal guard as run(): a corpus with many
-            # thousands of oversized clusters must not rebuild the
-            # giant In-predicate the main path explicitly avoids
-            if len(keys) <= 1000:
-                flt = cur.where(F.col("cluster_key").isin(list(keys)))
-            else:
-                kdf = local_rows_df(cur.sparkSession,
-                                    [(k,) for k in keys], "cluster_key string")
-                flt = cur.join(F.broadcast(kdf), "cluster_key", "leftsemi")
-            return {r.cluster_key for r in
-                    (flt.groupBy("cluster_key")
-                     .agg(F.count(F.lit(1)).alias("size"))
-                     .where(F.col("size") > max_size).collect())}
-
-        hurry = elapsed > 0.7 * timeout_s
-        forced = [k for k, s in over.items()
-                  if use_force and (s > force_above or hurry)]
-        laddered = [k for k in over if k not in set(forced)]
-        if forced:
-            assign = run("force", forced, assign)
-            level["usage"]["force"] = len(forced)
-        if laddered:
-            assign = run("smart", laddered, assign).localCheckpoint(eager=True)
-            # which of them actually split?
-            still = still_oversized(assign, laddered)
-            level["usage"]["ladder_smart"] = len(laddered) - len(still)
-            aggr = [k for k in still if depth >= 3 and over[k] >= 500]
-            if aggr:
-                assign = run("aggressive", aggr, assign).localCheckpoint(eager=True)
-                rem = still_oversized(assign, aggr)
-                level["usage"]["ladder_aggressive"] = len(aggr) - len(rem)
-                still = (still - set(aggr)) | rem
-            if still and features is not None:
-                targets = sorted(still)
-                assign = run("kmeans", targets, assign).localCheckpoint(eager=True)
-                # KMeans is NOT guaranteed to split (identical feature
-                # vectors collapse every center onto one point: every
-                # member lands in bucket "<key>_k0", RENAMED but not
-                # split) — verify against the targets AND their _k
-                # descendants, and route survivors to force
-                over2 = {r.cluster_key for r in
-                         (assign.where(clustered("cluster_key"))
-                          .groupBy("cluster_key")
-                          .agg(F.count(F.lit(1)).alias("size"))
-                          .where(F.col("size") > max_size).collect())}
-                tset = set(targets)
-                still = {k for k in over2
-                         if k in tset
-                         or any(k.startswith(t + "_k") for t in tset)}
-                # usage counts progressed TARGETS (one target can leave
-                # several oversized _k children in `still`; subtracting
-                # len(still) would go negative and fake a no_progress)
-                unresolved = {t for t in tset
-                              if t in over2
-                              or any(k.startswith(t + "_k") for k in over2)}
-                level["usage"]["kmeans"] = len(targets) - len(unresolved)
-            if still and use_force:
-                assign = run("force", sorted(still), assign)
-                level["usage"]["force"] = level["usage"].get("force", 0) + len(still)
-                still = set()
-        assign = assign.localCheckpoint(eager=True)  # cut per-level lineage
-        made = sum(level["usage"].values())
-        level["subdivisions_made"] = made
-        stats["levels"].append(level)
-        stats["total_subdivisions"] += made
-        if made == 0:
-            stats["stopped"] = "no_progress"
-            break
-    else:
-        stats["stopped"] = "max_depth"
-
-    stats["final_depth"] = len(stats["levels"])
-    stats["total_time_s"] = round(time.time() - t0, 3)
+    levels: dict[int, dict] = {}
+    for tr in traces:
+        for depth, n_over, usage, made in tr["levels"]:
+            lv = levels.setdefault(depth, {"depth": depth, "n_oversized": 0,
+                                           "usage": {},
+                                           "subdivisions_made": 0})
+            lv["n_oversized"] += n_over
+            for k, v in usage.items():
+                lv["usage"][k] = lv["usage"].get(k, 0) + v
+            lv["subdivisions_made"] += made
+    reasons = {tr["stopped"] for tr in traces}
+    stats: dict = {
+        "max_cluster_size": max_size,
+        "levels": [levels[d] for d in sorted(levels)],
+        "total_subdivisions": sum(lv["subdivisions_made"]
+                                  for lv in levels.values()),
+        "stopped": next((r for r in ("timeout", "max_depth", "no_progress")
+                         if r in reasons), "converged"),
+        "final_depth": len(levels),
+        "total_time_s": round(time.time() - t0, 3),
+    }
     return assign, stats

@@ -33,7 +33,7 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions.localrel import local_rows_df
 from ..operators import blocking as B
 from ..operators.cc import assign_clusters, connected_components
-from ..operators.signatures import add_signatures, migrate_signed
+from ..operators.signatures import add_signatures, require_signed_layout
 from ..operators.stats import clustered
 from ..operators.verify import build_edges
 from ..sources.checkpoint import CheckpointStore
@@ -56,30 +56,12 @@ class DedupPipeline:
         self.cfg = cfg
         self.store = CheckpointStore(spark, workdir)
 
-    def _signed_current(self, df: DataFrame, run_id: int) -> DataFrame:
-        """One-time in-place migration of a pre-r4 stored `signed`
-        table (no shingle_hashes). The stage table is REWRITTEN, not
-        just patched in-flight: CheckpointStore.append aligns new rows
-        to the existing table's columns, so an unmigrated table would
-        silently re-drop the column on every incremental batch. The
-        rewrite is an O(corpus) job, so it gets its own metrics row —
-        a resume whose wall-clock is dominated by migration must
-        localize to a stage like every other cost in this pipeline."""
-        migrated = migrate_signed(df, self.cfg)
-        if migrated is None:
-            return df
-        t0 = time.time()
-        out = self.store.rewrite("signed", migrated)
-        part_rows = self.store.partition_rows("signed")
-        self.store.log(run_id, "signed_migrate", t0,
-                       sum(n for _, n in part_rows), len(part_rows))
-        return out
-
     def _stage_params_match(self, name: str, params: dict) -> bool:
         """True iff the stored `<name>_params` marker equals `params`.
-        Missing marker = unknown provenance = no match (rebuild): the
-        marker is written AFTER the stage table, so a crash in between
-        errs toward recomputing, never toward serving a stale table."""
+        Missing marker = unknown provenance = no match (rebuild): a
+        rebuild drops the marker BEFORE writing the stage table and
+        writes the new one after it, so a crash in between errs toward
+        recomputing, never toward serving a stale table."""
         import json as _json
         pstage = f"{name}_params"
         if not self.store.exists(pstage):
@@ -95,14 +77,8 @@ class DedupPipeline:
                                        "params string"))
 
     def _stage(self, name: str, run_id: int, resume: bool, build,
-               migrate=None, params: dict | None = None
-               ) -> tuple[DataFrame, int]:
-        """`migrate`: optional (df, run_id) -> df hook applied when a
-        stored table is read back on resume — the per-stage place for
-        stored-layout upgrades, so the generic runner never grows
-        stage-name special cases.
-
-        `params`: the stage's parameterization, for stages whose output
+               params: dict | None = None) -> tuple[DataFrame, int]:
+        """`params`: the stage's parameterization, for stages whose output
         depends on caller arguments (e.g. clusters_sub on
         max_cluster_size). Resume serves the stored table only when the
         stored params marker matches; a param change rebuilds instead
@@ -111,8 +87,6 @@ class DedupPipeline:
         if resume and self.store.exists(name) and (
                 params is None or self._stage_params_match(name, params)):
             df = self.store.read(name)
-            if migrate is not None:
-                df = migrate(df, run_id)
             # row count from commit metadata (parquet footers / Iceberg
             # manifests), NOT df.count(): a resumed run must not pay a
             # full scan-and-count job per stage table it merely reads
@@ -120,6 +94,8 @@ class DedupPipeline:
             # "resume" could possibly do)
             return df, sum(n for _, n in self.store.partition_rows(name))
         t0 = time.time()
+        if params is not None:
+            self.store.drop(f"{name}_params")
         df = self.store.write(name, build())
         if params is not None:
             self._write_stage_params(name, params)
@@ -140,8 +116,8 @@ class DedupPipeline:
         run_id = self.store.next_run_id()
 
         signed, n_clips = self._stage("signed", run_id, resume,
-                                      lambda: add_signatures(clips, cfg),
-                                      migrate=self._signed_current)
+                                      lambda: add_signatures(clips, cfg))
+        require_signed_layout(signed)
 
         cands, n_cands = self._stage(
             "candidates", run_id, resume,
@@ -246,7 +222,7 @@ class DedupPipeline:
                 raise ValueError(
                     f"run_incremental needs a completed prior run: "
                     f"stage table {stage!r} not found under the workdir")
-        signed_old = self._signed_current(self.store.read("signed"), run_id)
+        signed_old = require_signed_layout(self.store.read("signed"))
 
         # Idempotency anchor: the fold's table mutations commit as ONE
         # cross-stage transaction (CheckpointStore.commit_txn), so after

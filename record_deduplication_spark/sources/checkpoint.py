@@ -260,10 +260,17 @@ class CheckpointStore:
         first. Callers relying on cross-stage atomicity should treat
         Iceberg mode as per-table atomic only.
 
-        Returns {stage: re-read DataFrame} for every touched stage.
+        A stage may be named in `appends` or in `rewrites`, not both
+        (ValueError). Returns {stage: re-read DataFrame} for every
+        touched stage.
         """
         appends = appends or {}
         rewrites = rewrites or {}
+        both = sorted(set(appends) & set(rewrites))
+        if both:  # the rewrite's swap would silently drop the appends
+            raise ValueError(
+                f"commit_txn: stage(s) {both} named in both appends and "
+                f"rewrites; fold the appended rows into the rewrite df")
         if self.use_iceberg:
             for stage, df in appends.items():
                 self.append(stage, df)

@@ -170,8 +170,8 @@ def test_multimodal_stubbed_codec(spark, tmpdir_session):
 
 def test_cluster_stats_ops(spark):
     from record_deduplication_spark.operators.stats import (
-        cluster_stats, materialize_groups, score_bands, subdivide_oversized,
-        unique_records)
+        cluster_stats, materialize_groups, score_bands, unique_records)
+    from record_deduplication_spark.operators.subdivide import subdivide_force
     cl = spark.createDataFrame(
         [("a", 0), ("b", 0), ("c", 0), ("d", 1), ("e", 1), ("f", -1), ("g", -1)],
         "clip_id string, cluster_id long")
@@ -190,7 +190,7 @@ def test_cluster_stats_ops(spark):
     b = score_bands(edges).toPandas()
     assert b["n_pairs"].sum() == 3
 
-    sub = subdivide_oversized(cl, max_size=2).toPandas()
+    sub = subdivide_force(cl, max_size=2).toPandas()
     c0 = sub[sub.cluster_key.str.startswith("0_")]
     assert len(c0) == 3 and c0["cluster_key"].nunique() >= 2  # split happened
     assert set(sub[sub.cluster_key == "-1"]["clip_id"]) == {"f", "g"}
@@ -257,7 +257,7 @@ def test_map_distinct_calls_fn_once_per_value(spark):
 
 def test_subdivide_kmeans_splits_blobs(spark):
     import numpy as np
-    from record_deduplication_spark.operators.stats import subdivide_kmeans
+    from record_deduplication_spark.operators.subdivide import subdivide_kmeans
     rng = np.random.default_rng(3)
     rows, frows = [], []
     # cluster 0: oversized (20 members) made of two well-separated blobs
@@ -314,14 +314,15 @@ def test_zero_sample_clip_does_not_crash(spark):
 
 
 def test_subdivide_oversized_round_robin_bound(spark):
-    """The single-pass split must bound EVERY bucket by construction
-    (a hash split can deterministically collapse into one bucket)."""
-    from record_deduplication_spark.operators.stats import subdivide_oversized
+    """The single-pass force split must bound EVERY bucket by
+    construction (a hash split can deterministically collapse into one
+    bucket)."""
+    from record_deduplication_spark.operators.subdivide import subdivide_force
     cl = spark.createDataFrame([(f"x{i:03d}", 7) for i in range(25)]
                                + [("solo", 8), ("n1", -1)],
                                "clip_id string, cluster_id long")
-    out = subdivide_oversized(cl, max_size=10).toPandas()
-    big = out[out["cluster_key"].str.startswith("7_")]
+    out = subdivide_force(cl, max_size=10).toPandas()
+    big = out[out["cluster_key"].str.startswith("7_f")]
     assert len(big) == 25
     assert big.groupby("cluster_key").size().max() <= 10
     assert out.set_index("clip_id").loc["solo", "cluster_key"] == "8"

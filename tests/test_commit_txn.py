@@ -365,3 +365,19 @@ def test_commit_txn_crash_sweep_every_fs_op(spark, tmp_path, monkeypatch):
     # sanity on the sweep itself: both outcomes must occur (crashes
     # before the commit point roll back, after it roll forward)
     assert any(results) and not all(results), results
+
+
+def test_txn_same_stage_append_and_rewrite_rejected(spark, store):
+    """Naming one stage in both appends and rewrites would let the
+    rewrite's directory swap silently discard the appended rows: it
+    must fail before touching any table."""
+    with pytest.raises(ValueError, match="both appends and rewrites"):
+        store.commit_txn(
+            appends={"a": spark.range(10, 12).selectExpr("id", "id * 2 AS v"),
+                     "b": spark.range(5, 6).selectExpr("id", "id + 100 AS w")},
+            rewrites={"a": spark.range(0, 3).selectExpr("id", "id * 2 AS v")})
+    assert _ids(store, "a") == list(range(10))
+    assert _ids(store, "b") == list(range(5))
+    assert not [f for f in os.listdir(store.base)
+                if f.startswith("_txn_") or "__txnrw_" in f
+                or "__append_" in f]

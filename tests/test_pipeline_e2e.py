@@ -215,3 +215,36 @@ def test_degenerate_corpora(spark, tmp_path):
         spark.createDataFrame(dup), resume=False)
     assert rd.stats["n_clusters"] == 1
     assert {r.cluster_id for r in rd.clusters.collect()} == {"c0"}
+
+
+def test_clusters_sub_crash_before_marker_rebuilds(spark, tmp_path,
+                                                   monkeypatch):
+    """A rebuild drops the params marker BEFORE writing the table: a
+    crash between the clusters_sub write and the new marker must not
+    leave the OLD marker next to the NEW table, or a later resume under
+    the old params would serve the table built under the new ones."""
+    from record_deduplication_spark.datagen import generate_clips
+
+    clips = spark.createDataFrame(generate_clips(n_clips=120, seed=13)[0])
+    wd = str(tmp_path / "wd")
+
+    def table(df):
+        return df.toPandas().sort_values("clip_id").reset_index(drop=True)
+
+    want = table(DedupPipeline(spark, wd).run(
+        clips, resume=False, max_cluster_size=500).subdivided)
+
+    def crash(self, name, params):
+        raise RuntimeError("killed before the params marker write")
+
+    monkeypatch.setattr(DedupPipeline, "_write_stage_params", crash)
+    pipe = DedupPipeline(spark, wd)
+    with pytest.raises(RuntimeError, match="params marker"):
+        pipe.run(clips, resume=True, max_cluster_size=2)
+    monkeypatch.undo()
+    # non-vacuous: the crashed rebuild did replace the table
+    assert not table(pipe.store.read("clusters_sub")).equals(want)
+
+    got = DedupPipeline(spark, wd).run(clips, resume=True,
+                                       max_cluster_size=500).subdivided
+    assert table(got).equals(want)

@@ -1,16 +1,15 @@
-"""Pre-r4 workdir compatibility: stored `signed` tables written before
-the r4 layout lack `shingle_hashes`. Resume and run_incremental on such
-a workdir must migrate the table in place (text-only recompute from
-transcript_norm — no audio re-decode) instead of crashing in the edges
-stage, and the REWRITE must stick so CheckpointStore.append (which
-aligns new rows to the existing table's columns) cannot silently
-re-drop the column on later incremental batches.
+"""Stored `signed` layout: tables written before `shingle_hashes` was
+added must fail loudly with the remedy (re-run from scratch) on resume
+and on run_incremental, instead of crashing in the edges stage or
+letting CheckpointStore.append (which aligns new rows to the existing
+table's columns) silently drop the column from later batches.
 
 Also pins the production signature scan to the canonical kernel: every
 `shingle_hashes` value add_signatures emits must equal
 shingle_hash_set(transcript_norm) — the same function the Jaccard
-equality tests and the migration use — so the stored representation
-cannot drift from what the tests verify.
+equality tests use — so the stored representation cannot drift from
+what the tests verify. And CheckpointStore.rewrite's self-referential
+swap and kill-window repair.
 """
 
 import pyspark.sql.functions as F
@@ -19,7 +18,7 @@ import pytest
 from record_deduplication_spark.config import DEFAULT_CONFIG
 from record_deduplication_spark.datagen import generate_clips
 from record_deduplication_spark.operators.signatures import (
-    add_signatures, migrate_signed, shingle_hash_set)
+    add_signatures, shingle_hash_set)
 from record_deduplication_spark.plans.pipeline import DedupPipeline
 
 
@@ -29,9 +28,9 @@ def clips(spark):
     return spark.createDataFrame(pdf).localCheckpoint(eager=True)
 
 
-def _strip_to_pre_r4(pipe):
-    """Rewrite the stored signed table without shingle_hashes —
-    byte-level simulation of a workdir persisted by r1-r3 code."""
+def _strip_shingle_hashes(pipe):
+    """Rewrite the stored signed table without shingle_hashes — a
+    workdir persisted by the older layout."""
     old = pipe.store.read("signed").drop("shingle_hashes")
     pipe.store.rewrite("signed", old)
 
@@ -45,59 +44,18 @@ def test_scan_matches_canonical_kernel(spark, clips):
             r.transcript_norm, DEFAULT_CONFIG.shingle_k)
 
 
-def test_migrate_signed_none_when_current(spark, clips):
-    signed = add_signatures(clips.limit(10), DEFAULT_CONFIG)
-    assert migrate_signed(signed, DEFAULT_CONFIG) is None
-
-
-def test_resume_migrates_pre_r4_workdir(spark, clips, tmp_path):
+def test_old_signed_layout_fails_loudly(spark, clips, tmp_path):
     pipe = DedupPipeline(spark, str(tmp_path / "wd"))
-    res = pipe.run(clips, resume=False)
-    want_clusters = res.clusters.toPandas().sort_values("clip_id") \
-                       .reset_index(drop=True)
-    want_sh = {r.clip_id: r.shingle_hashes for r in
-               pipe.store.read("signed")
-                   .select("clip_id", "shingle_hashes").collect()}
-
-    _strip_to_pre_r4(pipe)
+    pipe.run(clips, resume=False)
+    _strip_shingle_hashes(pipe)
     assert "shingle_hashes" not in pipe.store.read("signed").columns
-    # resume with edges/clusters dropped: the edges stage must rebuild
-    # from the MIGRATED signed table (this is the path that crashed)
-    pipe.store.drop("edges")
-    pipe.store.drop("clusters")
-    res2 = DedupPipeline(spark, str(tmp_path / "wd")).run(clips, resume=True)
-    got_clusters = res2.clusters.toPandas().sort_values("clip_id") \
-                       .reset_index(drop=True)
-    assert want_clusters.equals(got_clusters)
-    # the migration rewrote the STORED table (not just the in-flight
-    # df) and reproduced the scan's exact values
-    got_sh = {r.clip_id: r.shingle_hashes for r in
-              pipe.store.read("signed")
-                  .select("clip_id", "shingle_hashes").collect()}
-    assert got_sh == want_sh
-
-
-def test_run_incremental_migrates_pre_r4_workdir(spark, clips, tmp_path):
-    is_new = F.pmod(F.xxhash64("clip_id"), F.lit(5)) == 0
-    old_clips = clips.where(~is_new).localCheckpoint(eager=True)
-    new_clips = clips.where(is_new).localCheckpoint(eager=True)
-
-    full = DedupPipeline(spark, str(tmp_path / "full")).run(
-        clips, resume=False)
-    want = full.clusters.toPandas().sort_values("clip_id") \
-               .reset_index(drop=True)
-
-    pipe = DedupPipeline(spark, str(tmp_path / "inc"))
-    pipe.run(old_clips, resume=False)
-    _strip_to_pre_r4(pipe)
-    inc = pipe.run_incremental(new_clips, all_clips=clips)
-    got = inc.clusters.toPandas().sort_values("clip_id") \
-             .reset_index(drop=True)
-    assert want.equals(got)
-    # append after migration keeps the r4 schema (the silent-drop trap)
-    assert "shingle_hashes" in pipe.store.read("signed").columns
-    assert pipe.store.read("signed").where(
-        F.col("shingle_hashes").isNull()).count() == 0
+    with pytest.raises(ValueError, match="re-run from scratch"):
+        DedupPipeline(spark, str(tmp_path / "wd")).run(clips, resume=True)
+    with pytest.raises(ValueError, match="re-run from scratch"):
+        DedupPipeline(spark, str(tmp_path / "wd")).run_incremental(
+            clips.limit(5), all_clips=clips)
+    # failing loudly left the stored table as it was
+    assert "shingle_hashes" not in pipe.store.read("signed").columns
 
 
 def test_checkpoint_rewrite_self_referential(spark, tmp_path):

@@ -108,14 +108,11 @@ def test_subdivide_ladder_singletons_to_noise(spark):
     assert got2["m6"] == "A"
 
 
-def test_ladder_driver_matches_distributed(spark):
-    """The small-graph driver ladder (one collect, all rungs) must be
-    value-identical to the per-rung distributed loop — mixed scenario:
-    one cluster accepted at rung 1, one at rung 2, one unsplittable,
-    plus a noise singleton at the accepted rung."""
-    import dataclasses
-    from record_deduplication_spark.config import DEFAULT_CONFIG
-
+def test_ladder_mixed_rungs_null_and_self_loop_edges(spark):
+    """Mixed scenario: one cluster accepted at rung 1, one at rung 2,
+    one unsplittable, plus a noise singleton at the accepted rung;
+    NULL-score and self-loop edges are dropped, never crash or flip a
+    verdict."""
     rows = (
         # A: two halves joined by one 0.8 edge -> survives rung 0.7,
         # splits at rung 0.9
@@ -125,10 +122,8 @@ def test_ladder_driver_matches_distributed(spark):
            ("b4", "b5", .95), ("b2", "b3", .5), ("b5", "b6", .5)]
         # C: uniformly strong chain -> never splits
         + _chain_edges([f"c{i}" for i in range(6)])
-        # degenerate edges BOTH regimes must drop identically: a
-        # NULL score (distributed: `_score >= t` is NULL) and a
-        # self-loop (distributed: cc filters src != dst) — without the
-        # driver-side guards these would crash / flip C's verdict
+        # degenerate edges: a NULL score (would bridge C's ends) and a
+        # self-loop (would count c2 as its own component)
         + [("c0", "c5", None), ("c2", "c2", .99)])
     edges = spark.createDataFrame(rows, "id_1 string, id_2 string, score double")
     members = ([(f"a{i}", "A") for i in range(8)]
@@ -138,19 +133,13 @@ def test_ladder_driver_matches_distributed(spark):
     clusters = spark.createDataFrame(members,
                                      "clip_id string, cluster_id string")
     for noise in (True, False):
-        # thresholds as a GENERATOR: the driver path walks rungs once
-        # per cluster and must not exhaust a one-shot iterable
-        drv = subdivide_ladder(clusters, edges, max_size=4,
+        # thresholds as a GENERATOR: every cluster walks the rungs, so
+        # a one-shot iterable must not be exhausted by the first one
+        out = subdivide_ladder(clusters, edges, max_size=4,
                                thresholds=(t for t in [0.7, 0.9]),
                                singletons_to_noise=noise).toPandas()
-        dist_cfg = dataclasses.replace(DEFAULT_CONFIG, cc_driver_max_edges=0)
-        dist = subdivide_ladder(clusters, edges, max_size=4,
-                                thresholds=[0.7, 0.9], cfg=dist_cfg,
-                                singletons_to_noise=noise).toPandas()
-        d = drv.sort_values("clip_id").reset_index(drop=True)
-        x = dist.sort_values("clip_id").reset_index(drop=True)
-        assert d.equals(x), f"driver != distributed (noise={noise})"
-        got = dict(zip(d["clip_id"], d["cluster_key"]))
+        got = dict(zip(out["clip_id"], out["cluster_key"]))
+        assert len(got) == len(members)
         assert {got[f"a{i}"] for i in range(4)} == {"A.a0"}
         assert {got[f"a{i}"] for i in range(4, 8)} == {"A.a4"}
         assert {got[f"b{i}"] for i in range(3)} == {"B.b0"}
@@ -270,3 +259,78 @@ def test_kmeans_null_feature_vector_kept_not_crashed(spark):
     assert len(out) == 12
     assert out.set_index("clip_id").loc["c05", "cluster_key"] == "big"  # kept
     assert out["cluster_key"].nunique() >= 2  # others actually split
+
+
+def test_float_noise_label_is_not_a_cluster(spark):
+    """A double cluster_id column carries noise as -1.0 ("-1.0" once
+    cast to a string key): an oversized -1.0 group is noise, so it
+    passes through subdivision untouched and forms no pairs."""
+    from record_deduplication_spark.operators.stats import cluster_agreement
+    clusters = spark.createDataFrame(
+        [(f"n{i}", -1.0) for i in range(8)] + [("a", 1.0), ("b", 1.0)],
+        "clip_id string, cluster_id double")
+    empty = spark.createDataFrame([], "id_1 string, id_2 string, score double")
+    assign, stats = subdivide_adaptive(clusters, empty, max_size=3)
+    got = dict(assign.select("clip_id", "cluster_key").collect())
+    assert {got[f"n{i}"] for i in range(8)} == {"-1.0"}
+    assert got["a"] == got["b"] == "1.0"
+    assert stats["levels"] == [] and stats["stopped"] == "converged"
+    agree = cluster_agreement(clusters, clusters).collect()[0]
+    assert agree.n_pairs_ref == agree.n_pairs_test == 1
+
+
+def _jobs_submitted(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_subdivide_adaptive_job_count_independent_of_levels(spark):
+    """The adaptive loop runs inside the per-cluster kernel, so the
+    Spark jobs subdivide_adaptive submits do not grow with the number
+    of oversized clusters or depth levels (±2 for AQE's asynchronous
+    broadcast jobs)."""
+    schema = "id_1 string, id_2 string, score double"
+    # (a) one 30-member uniformly strong chain: no rung splits it, so
+    # force bounds it at depth 0
+    one = [f"o{i:02d}" for i in range(30)]
+    a_edges = spark.createDataFrame(_chain_edges(one, strong=0.99), schema)
+    a_clusters = spark.createDataFrame([(i, "O") for i in one],
+                                       "clip_id string, cluster_id string")
+    # (b) four 40-member clusters of four 10-blocks: the 0.81 middle
+    # bridge falls at depth 0, the 0.9 bridges only at depth 1
+    rows, members = [], []
+    for g in range(4):
+        ids = [f"g{g}m{i:02d}" for i in range(40)]
+        members += [(i, f"G{g}") for i in ids]
+        for b in range(4):
+            rows += _chain_edges(ids[b * 10:(b + 1) * 10], strong=0.99)
+        rows += [(ids[9], ids[10], 0.9), (ids[19], ids[20], 0.81),
+                 (ids[29], ids[30], 0.9)]
+    b_edges = spark.createDataFrame(rows, schema)
+    b_clusters = spark.createDataFrame(members,
+                                       "clip_id string, cluster_id string")
+    kw = dict(max_size=12, base_threshold=0.99, high_threshold=0.8,
+              max_depth=10, timeout_s=120.0)
+    out = {}
+
+    def run(tag, clusters, edges):
+        def go():
+            out[tag] = subdivide_adaptive(clusters, edges, **kw)
+        return _jobs_submitted(spark, f"subdivide-jobs-{tag}", go)
+
+    run("warm", a_clusters, a_edges)
+    jobs_a = run("a", a_clusters, a_edges)
+    jobs_b = run("b", b_clusters, b_edges)
+    assert out["a"][1]["final_depth"] == 1
+    assert out["a"][1]["levels"][0]["usage"]["force"] == 1
+    assert out["b"][1]["final_depth"] == 2
+    assert out["b"][1]["levels"][1]["usage"]["ladder_smart"] == 8
+    sizes = out["b"][0].groupBy("cluster_key").count().toPandas()
+    assert len(sizes) == 16 and (sizes["count"] == 10).all()
+    assert jobs_a > 0 and abs(jobs_a - jobs_b) <= 2, (jobs_a, jobs_b)
